@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from zarr_datafusion_search_spark.operators.cache import (
+    _auto_barrier_mode,
     lineage_barrier,
     release_operator_caches,
 )
@@ -36,6 +37,19 @@ def test_auto_is_local_under_local_master(spark, frame):
     # the test session runs under local[...]: auto == local
     out = lineage_barrier(frame, eager=False)
     assert "LogicalRDD" in _plan(out) or "ExistingRDD" in _plan(out)
+
+
+@pytest.mark.parametrize(
+    "master, mode",
+    [
+        ("local", "local"),
+        ("local[4]", "local"),
+        ("local-cluster[2,1,1024]", "reliable"),
+        ("spark://h:7077", "reliable"),
+    ],
+)
+def test_auto_mode_by_master(master, mode):
+    assert _auto_barrier_mode(master) == mode
 
 
 def test_reliable_without_dir_keeps_lineage_via_persist(spark, frame):

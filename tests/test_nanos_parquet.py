@@ -1,10 +1,7 @@
-"""Tests for the executor-side ns-parquet data source."""
-
-import datetime
+"""Tests for the native ns-parquet read (``nanos_parquet.read_native``)."""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
 
 from zarr_datafusion_search_spark.sources import nanos_parquet
@@ -18,19 +15,10 @@ def _ns_table(n, start=0):
     return pa.table({"k": pa.array(range(start, start + n)), "ts": ts})
 
 
-def test_row_group_fanout_and_truncation(spark, tmp_path):
+def test_read_native_truncates_ns_to_us(spark, tmp_path):
     path = str(tmp_path / "ev.parquet")
-    # 4 row groups of 10 rows each
     pq.write_table(_ns_table(40), path, row_group_size=10)
-    nanos_parquet.register(spark)
-    df = (
-        spark.read.format(nanos_parquet.FORMAT_NAME)
-        .option("path", path)
-        .option("target_rows_per_partition", 10)
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 4  # one task per row group bundle
-    rows = df.orderBy("k").collect()
+    rows = nanos_parquet.read_native(spark, path).orderBy("k").collect()
     assert len(rows) == 40
     # ns ticks truncate towards zero at us resolution: 1_000_000_007 ns step
     # means row i's sub-second part is (i * 7) ns past a us boundary — all
@@ -41,32 +29,12 @@ def test_row_group_fanout_and_truncation(spark, tmp_path):
     ]
 
 
-def test_bundles_small_row_groups(spark, tmp_path):
-    path = str(tmp_path / "ev2.parquet")
-    pq.write_table(_ns_table(40), path, row_group_size=10)
-    nanos_parquet.register(spark)
-    df = (
-        spark.read.format(nanos_parquet.FORMAT_NAME)
-        .option("path", path)
-        .option("target_rows_per_partition", 20)
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 2
-    assert df.count() == 40
-
-
 def test_directory_of_part_files(spark, tmp_path):
     d = tmp_path / "evdir"
     d.mkdir()
     pq.write_table(_ns_table(10), str(d / "part-0.parquet"))
     pq.write_table(_ns_table(10, start=10), str(d / "part-1.parquet"))
-    nanos_parquet.register(spark)
-    df = (
-        spark.read.format(nanos_parquet.FORMAT_NAME)
-        .option("path", str(d))
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 2
+    df = nanos_parquet.read_native(spark, str(d))
     assert df.count() == 20
     assert df.agg(F.min("k"), F.max("k")).first() == (0, 19)
 
@@ -74,12 +42,7 @@ def test_directory_of_part_files(spark, tmp_path):
 def test_projection_still_works(spark, tmp_path):
     path = str(tmp_path / "ev3.parquet")
     pq.write_table(_ns_table(25), path)
-    nanos_parquet.register(spark)
-    df = (
-        spark.read.format(nanos_parquet.FORMAT_NAME)
-        .option("path", path)
-        .load()
-    )
+    df = nanos_parquet.read_native(spark, path)
     out = df.select("k").filter(F.col("k") % 5 == 0)
     assert sorted(r.k for r in out.collect()) == [0, 5, 10, 15, 20]
 
@@ -98,18 +61,24 @@ def test_events_fixture_matches_duckdb(spark, sf_dir, duck):
     assert (s_min, s_max) == (d_min, d_max)
 
 
-def test_read_native_matches_python_source(spark, sf_dir):
-    from zarr_datafusion_search_spark.sources import nanos_parquet
-
+def test_read_native_matches_pyarrow(spark, sf_dir):
     path = f"{sf_dir}/events.parquet"
-    nanos_parquet.register(spark)
-    via_ds = (
-        spark.read.format(nanos_parquet.FORMAT_NAME)
-        .option("path", path)
-        .load()
+    t = pq.read_table(path)
+    t = t.cast(
+        pa.schema(
+            pa.field(f.name, pa.timestamp("us", f.type.tz))
+            if pa.types.is_timestamp(f.type)
+            else f
+            for f in t.schema
+        ),
+        safe=False,
     )
-    via_native = nanos_parquet.read_native(spark, path)
-    assert via_native.schema == via_ds.schema
-    a = sorted(map(tuple, via_ds.collect()))
-    b = sorted(map(tuple, via_native.collect()))
-    assert a == b
+
+    def plain(row):
+        return tuple(
+            v.replace(tzinfo=None) if hasattr(v, "tzinfo") else v for v in row
+        )
+
+    want = sorted(plain(r.values()) for r in t.to_pylist())
+    got = sorted(plain(r) for r in nanos_parquet.read_native(spark, path).collect())
+    assert got == want

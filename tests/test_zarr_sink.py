@@ -70,6 +70,44 @@ def test_overwrite_modes(spark, tmp_path):
     assert ZarrTable(store).to_df(spark).count() == 3
 
 
+def test_failed_overwrite_keeps_old_store(spark, tmp_path):
+    """Nulls fail the write job, before commit touches the old store."""
+    _ensure_registered(spark)
+    store = str(tmp_path / "keep.zarr")
+    spark.range(5).select(F.col("id")).write.format("zarr").mode("append").save(store)
+    bad = spark.createDataFrame([(1,), (None,)], "id long").repartition(2)
+    with pytest.raises(Exception, match="non-nullable|nulls"):
+        bad.write.format("zarr").mode("overwrite").save(store)
+    back = ZarrTable(store).to_df(spark)
+    assert sorted(r.id for r in back.collect()) == [0, 1, 2, 3, 4]
+
+
+def test_format_writer_stages_per_task_attempt(tmp_path, monkeypatch):
+    """Two attempts of one partition stage to different files, so a
+    speculative attempt cannot interleave writes with the first."""
+    import pyarrow as pa
+    import pyspark
+    from pyspark.sql import types as T
+
+    from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrWriter
+
+    class _Task:
+        def partitionId(self):
+            return 0
+
+    monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(lambda: _Task()))
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    writer = ZarrWriter(str(tmp_path / "att.zarr"), "/", schema, False, 8, 0)
+    msgs = [
+        writer.write(iter([pa.record_batch([pa.array(vals)], names=["id"])]))
+        for vals in ([1, 2, 3], [4, 5])
+    ]
+    assert msgs[0].staged_path != msgs[1].staged_path
+    for msg, n in zip(msgs, (3, 2)):
+        with pa.ipc.open_file(msg.staged_path) as reader:
+            assert reader.read_all().num_rows == n
+
+
 def test_unsupported_type_rejected(spark, tmp_path):
     _ensure_registered(spark)
     df = spark.createDataFrame([([1, 2],)], ["arr"])

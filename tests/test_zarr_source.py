@@ -507,3 +507,27 @@ def test_datetime_pruning_exact_boundary(spark, tmp_path):
     r3 = ZarrReader(store2, "g", schema2, partition_rows=100)
     list(r3.pushFilters([GreaterThanOrEqual(("t",), dt.datetime(2020, 1, 1, 0, 16, 39, 500000))]))
     assert not [p for p in r3.partitions() if p.stop > p.start]
+
+
+def test_unreadable_chunk_raises(tmp_path):
+    """Only a missing key means "fill" in zarr: a chunk key that exists but
+    cannot be read must raise, not decode as fill values."""
+    import os
+
+    store = str(tmp_path / "unreadable.zarr")
+    zarrv3.write_group(store, "g", {"a": np.arange(10, dtype=np.int64)}, chunk_rows=4)
+    chunk = zarrv3.open_array(store, "g/a").chunk_file(1)
+    os.remove(chunk)
+    os.mkdir(chunk)
+    with pytest.raises(OSError):
+        zarrv3.open_array(store, "g/a").read_range(0, 10)
+
+
+def test_missing_chunk_reads_as_fill(tmp_path):
+    import os
+
+    store = str(tmp_path / "missing.zarr")
+    zarrv3.write_group(store, "g", {"a": np.arange(10, dtype=np.int64)}, chunk_rows=4)
+    os.remove(zarrv3.open_array(store, "g/a").chunk_file(1))
+    got = zarrv3.open_array(store, "g/a").read_range(0, 10)
+    assert got.tolist() == [0, 1, 2, 3, 0, 0, 0, 0, 8, 9]

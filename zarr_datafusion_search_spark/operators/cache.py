@@ -55,6 +55,13 @@ def operator_cache_scope():
         release_operator_caches()
 
 
+def _auto_barrier_mode(master: str) -> str:
+    """``auto``'s rule: ``local`` only for an in-process ``local`` or
+    ``local[...]`` master. ``local-cluster[...]`` runs separate executor
+    processes, so executor loss is real there and it gets ``reliable``."""
+    return "local" if master == "local" or master.startswith("local[") else "reliable"
+
+
 def lineage_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
     """Materialization barrier with a deploy-mode-aware durability policy
     (round 13, VERDICT r12 what's-wrong #4).
@@ -74,7 +81,8 @@ def lineage_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
       so executor loss recomputes — fault-tolerant, at the cost of the
       CacheManager sharing semantics the checkpoint would have avoided).
     - ``auto`` (default): ``local`` under a ``local[...]`` master,
-      ``reliable`` under any cluster master — safe by default where
+      ``reliable`` under any cluster master, ``local-cluster[...]``
+      included — safe by default where
       fault tolerance is real, fast where it is moot.
 
     Eagerness is preserved in every branch (an eager barrier is part of
@@ -94,7 +102,7 @@ def lineage_barrier(df: DataFrame, eager: bool = False) -> DataFrame:
             master = spark.conf.get("spark.master", "")
         except Exception:
             master = ""
-        mode = "local" if master.startswith("local") else "reliable"
+        mode = _auto_barrier_mode(master)
     if mode == "local":
         return df.localCheckpoint(eager=eager)
     if spark.sparkContext.getCheckpointDir() is not None:

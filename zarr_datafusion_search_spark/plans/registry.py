@@ -131,9 +131,7 @@ def _read_nanos_parquet(spark: SparkSession, path: str) -> DataFrame:
     LONG (their physical INT64 encoding, which the native vectorized
     reader accepts) and rescaled to us timestamps in the plan — fully
     JVM-side, with the same truncation a DuckDB TIMESTAMP_NS -> python
-    datetime fetch applies on the oracle side. The executor-side
-    ``zdss_nanos_parquet`` Python data source remains as the general
-    fallback (see its module docstring) and is covered by its own tests.
+    datetime fetch applies on the oracle side.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -1,39 +1,18 @@
-"""Executor-side reader for parquet files carrying TIMESTAMP(NANOS).
+"""Native Spark read of parquet files carrying TIMESTAMP(NANOS).
 
 Spark's native parquet scan rejects nanosecond timestamps outright
-([PARQUET_TYPE_ILLEGAL]); the synthetic ``events.parquet`` fixtures are
-written that way. Round 1 bridged this by materializing the whole table
-through the driver (``pq.read_table`` + ``createDataFrame``) — correct, but
-driver-bound: at 100 TB the driver dies long before the first task runs.
+([PARQUET_TYPE_ILLEGAL]) under its own inferred schema; the synthetic
+``events.parquet`` fixtures are written that way. :func:`read_native`
+keeps the whole scan in Spark's vectorized reader: the driver reads only
+the parquet footer's schema, requests the ns columns as LONG (their
+physical INT64 encoding) and rescales them to microsecond timestamps in
+the plan, truncating towards zero — the same truncation a DuckDB
+TIMESTAMP_NS → python datetime fetch applies on the oracle side.
 
-This module replaces the bridge with a Python DataSource that keeps the
-driver's role to metadata only:
-
-- the driver reads just the parquet FOOTER (schema + row-group boundaries);
-- each input partition is a bundle of row groups, so a many-row-group file
-  fans out across executors exactly like Spark's native parquet split logic
-  (the fixtures are single-row-group, which degenerates to one partition —
-  real ns-parquet at scale has many row groups and many files);
-- each task reads only its row groups via ``pq.ParquetFile.read_row_groups``
-  and casts ns→us **executor-side** with ``safe=False`` (truncation towards
-  zero — the same truncation a DuckDB TIMESTAMP_NS → python datetime fetch
-  applies on the oracle side), then yields Arrow record batches straight into
-  Spark's Arrow ingest path (no per-row pickling).
-
-A directory of ``*.parquet`` part-files is also accepted; row groups are
-enumerated per file so the fan-out covers the whole dataset.
+A directory of ``*.parquet`` part-files is also accepted.
 """
 
 from __future__ import annotations
-
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-FORMAT_NAME = "zdss_nanos_parquet"
-
-#: row groups are bundled into partitions until this many rows is reached,
-#: mirroring spark.sql.files.maxPartitionBytes-style coalescing of tiny
-#: row groups (metadata-only decision, made on the driver).
-_TARGET_ROWS_PER_PARTITION = 1_000_000
 
 
 def _list_files(path: str) -> list[str]:
@@ -91,26 +70,17 @@ def _field_ddl(t) -> str:
     return field_type(t)
 
 
-def _spark_ddl_from_arrow(schema) -> str:
-    """Map the footer's Arrow schema to a Spark DDL string, rescaling ns
-    timestamps to Spark's native microsecond resolution."""
-    return ", ".join(f"`{f.name}` {_field_ddl(f.type)}" for f in schema)
-
-
 def read_native(spark, path: str):
     """Read a ns-timestamp parquet through Spark's NATIVE vectorized
     reader by requesting the ns columns as LONG (their physical INT64
     encoding, which the reader accepts), then rescaling to microsecond
     timestamps in the plan: ``timestamp_micros(ts div 1000)``. The
-    truncation matches the executor-side source's Arrow ``safe=False``
-    cast and a DuckDB TIMESTAMP_NS fetch (all integer-truncate; test data
-    is post-epoch so rounding direction never differs).
+    truncation matches a DuckDB TIMESTAMP_NS fetch (both integer-truncate;
+    test data is post-epoch so rounding direction never differs).
 
-    This is the default route for the synthetic ``events`` table: it keeps
-    the whole scan JVM-side (whole-stage codegen, no Python workers) and
-    inherits native predicate pushdown on the non-timestamp columns. The
-    Python data source below remains the general fallback and the
-    demonstration of executor-side custom scans.
+    This is the route for the synthetic ``events`` table: it keeps the
+    whole scan JVM-side (whole-stage codegen, no Python workers) and
+    inherits native predicate pushdown on the non-timestamp columns.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -130,87 +100,3 @@ def read_native(spark, path: str):
             ddl.append(f"`{f.name}` {_field_ddl(f.type)}")
             cols.append(F.col(f.name))
     return spark.read.schema(", ".join(ddl)).parquet(path).select(*cols)
-
-
-def _cast_ns_to_us(table):
-    """Cast every ns-timestamp column of an Arrow table to us (truncating)."""
-    import pyarrow as pa
-
-    fields = []
-    changed = False
-    for f in table.schema:
-        if pa.types.is_timestamp(f.type) and f.type.unit != "us":
-            fields.append(pa.field(f.name, pa.timestamp("us", f.type.tz)))
-            changed = True
-        else:
-            fields.append(f)
-    if not changed:
-        return table
-    return table.cast(pa.schema(fields), safe=False)
-
-
-class _RowGroupPartition(InputPartition):
-    def __init__(self, file: str, row_groups: list[int], columns=None):
-        self.file = file
-        self.row_groups = row_groups
-        self.columns = columns
-
-
-class _NanosParquetReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        self.target_rows = int(
-            options.get("target_rows_per_partition", _TARGET_ROWS_PER_PARTITION)
-        )
-
-    def partitions(self):
-        import pyarrow.parquet as pq
-
-        parts: list[_RowGroupPartition] = []
-        for file in _list_files(self.path):
-            md = pq.ParquetFile(file).metadata
-            bundle: list[int] = []
-            bundled_rows = 0
-            for rg in range(md.num_row_groups):
-                bundle.append(rg)
-                bundled_rows += md.row_group(rg).num_rows
-                if bundled_rows >= self.target_rows:
-                    parts.append(_RowGroupPartition(file, bundle))
-                    bundle, bundled_rows = [], 0
-            if bundle:
-                parts.append(_RowGroupPartition(file, bundle))
-        return parts
-
-    def read(self, partition: _RowGroupPartition):
-        import pyarrow.parquet as pq
-
-        t = pq.ParquetFile(partition.file).read_row_groups(
-            partition.row_groups
-        )
-        yield from _cast_ns_to_us(t).to_batches()
-
-
-class NanosParquetDataSource(DataSource):
-    """``spark.read.format("zdss_nanos_parquet").option("path", p).load()``"""
-
-    @classmethod
-    def name(cls) -> str:
-        return FORMAT_NAME
-
-    def schema(self) -> str:
-        import pyarrow.parquet as pq
-
-        return _spark_ddl_from_arrow(
-            pq.read_schema(_list_files(self.options["path"])[0])
-        )
-
-    def reader(self, schema):
-        return _NanosParquetReader(self.options)
-
-
-def register(spark) -> None:
-    """Idempotently register the format on a session."""
-    try:
-        spark.dataSource.register(NanosParquetDataSource)
-    except Exception:
-        pass  # already registered on this session

@@ -428,9 +428,13 @@ class ZarrWriter(DataSourceArrowWriter):
 
     Zarr's regular chunk grid is why: a chunk's file name is its global row
     position / chunk_rows, unknowable per-task without a global row index.
-    The scale path (not yet built) assigns global row ids (per-partition
-    count + offset pass), repartitions on chunk id, and lets each task write
-    whole chunks directly — turning phase 2 into a metadata-only commit.
+    The scale path is ``zarr_sink.write_zarr_distributed``: it assigns
+    global row ids (per-partition count + offset pass), repartitions on
+    chunk id, and lets each task write whole chunks directly — a
+    metadata-only commit.
+
+    Nulls are rejected task-side in phase 1, so a failed overwrite leaves
+    the old store in place: ``commit`` is the first step that touches it.
     """
 
     def __init__(
@@ -456,11 +460,7 @@ class ZarrWriter(DataSourceArrowWriter):
         # when one exists; true row append (boundary-chunk merge) lives in
         # zarr_sink.append_zarr_distributed, which the DSv2 writer protocol
         # can't express (it would need the store's row count at planning).
-        if os.path.exists(os.path.join(path, "zarr.json")) and not overwrite:
-            raise ValueError(
-                f"zarr store already exists at {path}; use mode('overwrite') "
-                "to replace it, or append_zarr_distributed() to add rows"
-            )
+        zarrv3._check_store(path, overwrite, "mode('overwrite')")
 
     @staticmethod
     def _col_spec(field) -> dict:
@@ -490,15 +490,34 @@ class ZarrWriter(DataSourceArrowWriter):
         )
 
     def write(self, iterator) -> ZarrCommitMessage:
+        import uuid
+
         import pyarrow as pa
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         os.makedirs(self._staging, exist_ok=True)
-        staged = os.path.join(self._staging, f"part-{pid:05d}.arrow")
+        # one file per task attempt: speculative or zombie attempts of the
+        # same partition must not interleave writes into one staged file
+        staged = os.path.join(
+            self._staging,
+            f"part-{pid:05d}.{os.getpid()}.{uuid.uuid4().hex[:8]}.arrow",
+        )
         n = 0
         writer = None
         for batch in iterator:
+            for col, name in zip(batch.columns, batch.schema.names):
+                # the zarr table model is non-nullable: a null int/
+                # timestamp column silently degrades to float64+NaN under
+                # to_numpy (garbage bytes under int metadata), and string
+                # nulls would render as the literal 'None' — fail loudly
+                # instead. (Float NaN is a legal zarr value and passes.)
+                if col.null_count and not pa.types.is_floating(col.type):
+                    raise ValueError(
+                        f"column {name!r} has {col.null_count} nulls: the "
+                        "zarr table model is non-nullable — drop or fill "
+                        "nulls before writing"
+                    )
             if writer is None:
                 writer = pa.ipc.new_file(staged, batch.schema)
             writer.write_batch(batch)
@@ -512,18 +531,15 @@ class ZarrWriter(DataSourceArrowWriter):
     def commit(self, messages) -> None:
         import shutil
 
-        import numpy as np
         import pyarrow as pa
 
-        from zarr_datafusion_search_spark.sources import zarrv3
-
-        if self._overwrite and os.path.exists(os.path.join(self._path, "zarr.json")):
-            for entry in os.listdir(self._path):
-                if entry == ".staging":
-                    continue
-                p = os.path.join(self._path, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
-        group_dir = zarrv3.init_group(self._path, self._group)
+        group_dir = zarrv3._prepare_store(
+            self._path,
+            self._group,
+            self._overwrite,
+            "mode('overwrite')",
+            keep=(os.path.basename(self._staging),),
+        )
         writers = {
             f.name: zarrv3.ChunkedArrayWriter(
                 group_dir,
@@ -542,18 +558,6 @@ class ZarrWriter(DataSourceArrowWriter):
                     batch = reader.get_batch(i)
                     for f in self._schema.fields:
                         col = batch.column(f.name)
-                        # the zarr table model is non-nullable: a null int/
-                        # timestamp column silently degrades to float64+NaN
-                        # under to_numpy (garbage bytes under int metadata),
-                        # and string nulls would render as the literal
-                        # 'None' — fail loudly instead. (Float NaN is a
-                        # legal zarr value and passes through.)
-                        if col.null_count and not pa.types.is_floating(col.type):
-                            raise ValueError(
-                                f"column {f.name!r} has {col.null_count} "
-                                "nulls: the zarr table model is non-nullable "
-                                "— drop or fill nulls before writing"
-                            )
                         if pa.types.is_timestamp(col.type):
                             vals = col.cast(pa.timestamp("us")).cast(pa.int64())
                             writers[f.name].append(

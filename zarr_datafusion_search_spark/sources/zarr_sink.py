@@ -1,26 +1,35 @@
-"""Distributed (task-side) Zarr sink — the scale path for writing.
+"""Task-side Zarr writers: the scale path for writing.
 
-The ``zdss_zarr`` format writer (``zarr_datasource.ZarrWriter``) stages Arrow
+The ``format("zarr")`` writer (``zarr_datasource.ZarrWriter``) stages Arrow
 files per task and assembles chunks serially on the driver: correct, but
-throughput is driver-bound. This module implements the documented scale
-shape (reference is read-only — the whole sink is a beyond-parity
-extension):
+throughput is driver-bound. :func:`write_zarr_distributed` and
+:func:`append_zarr_distributed` write chunks on the executors instead (the
+reference is read-only, so the whole sink is a beyond-parity extension).
+Both run one write core, and a fresh write is an append at row 0 onto an
+empty store:
 
-1. **global row ids** — ``monotonically_increasing_id`` decomposes into
-   (partition id, within-partition offset); one metadata-light pass counts
-   rows per partition, a broadcast offset map turns the pair into a global
+1. **global row ids** from a first row (0, or the store's row count for an
+   append) — ``monotonically_increasing_id`` decomposes into (partition id,
+   within-partition offset); one metadata-light pass counts rows per
+   partition, a broadcast offset map turns the pair into a global
    contiguous row id. The input is persisted for the duration of the write
    so both passes see the same partition layout.
 2. **repartition on chunk id** — ``row_id // chunk_rows``; a single hash
    shuffle groups every row of a chunk into one task.
-3. **task-side chunk writes** — ``applyInPandas`` per chunk id: each group
-   IS one complete chunk; the task sorts it by row id, encodes every column
-   with the same codec stack as the streaming writer
-   (:func:`zarrv3.encode_chunk_payload`), writes the chunk files, and
-   returns one metadata row (chunk id, rows, per-column min/max).
-4. **metadata-only commit** — the driver verifies chunk coverage from the
-   returned rows (n_chunks rows, not data) and writes each array's
-   ``zarr.json`` with the assembled chunk stats.
+3. **task-side chunk writes** (:func:`_write_chunks`) — ``applyInPandas``
+   per chunk id: each group holds one chunk's new rows. The task checks
+   they are contiguous, merges the store's old tail rows into the boundary
+   chunk when the first row falls mid-chunk, pads, encodes every column
+   with the codec stack of the other writers
+   (:func:`zarrv3.encode_chunk_payload`, or
+   :func:`zarrv3.encode_shard_payload` for a sharded store), writes the
+   chunk files atomically, and returns one metadata row (chunk id, rows,
+   per-column min/max).
+4. **metadata-only commit** (:func:`_commit`) — the driver verifies chunk
+   coverage and the row count from the returned rows (one per chunk, not
+   data), stages every array's ``zarr.json`` with the kept stats prefix
+   plus the new chunk stats as ``zarr.json.pending``, then flips each with
+   ``os.replace``. Until then no metadata references a rewritten chunk.
 
 Nulls: the Zarr table model is non-nullable (every chunk is a dense typed
 buffer). Null-bearing columns fail loudly task-side unless ``null_fill``
@@ -71,7 +80,7 @@ def _series_to_vals(s, spec: dict, name: str, cid: int, null_fill: dict):
 
 
 def _assign_row_ids(df: DataFrame, chunk_rows: int, start: int):
-    """Phase 1 of both distributed writers: global contiguous row ids
+    """Phase 1 of the write core: global contiguous row ids
     from ``start`` via monotonically_increasing_id decomposition + a
     broadcast per-partition offset map. Returns ``(rows, n_new)`` where
     ``rows`` carries ``_row_id``/``_chunk_id``. The caller must have the
@@ -132,6 +141,168 @@ def _write_chunk_file(group_dir: str, name: str, cid: int, payload: bytes) -> No
     os.replace(tmp, final)
 
 
+def _write_chunks(
+    df: DataFrame,
+    group_dir: str,
+    specs: dict,
+    null_fill: dict,
+    chunk_rows: int,
+    first_row: int,
+    zstd_level: int,
+    inner_rows: int | None,
+    index_crc32c: bool,
+):
+    """Phases 1-3 of the write core: number ``df``'s rows from
+    ``first_row``, shuffle on chunk id and write every touched chunk
+    task-side. Returns ``(n_new, {chunk id: result row})``; an empty
+    ``df`` stops after the row count, with no write job."""
+    import numpy as np
+
+    from zarr_datafusion_search_spark.sources import zarrv3
+
+    names = list(specs)
+    for name in names:
+        os.makedirs(os.path.join(group_dir, name, "c"), exist_ok=True)
+    df = df.persist()
+    try:
+        rows, n_new = _assign_row_ids(df, chunk_rows, first_row)
+        if n_new == 0:
+            return 0, {}
+        n_rows = first_row + n_new
+
+        def write_chunk(pdf):
+            import pandas as pd
+
+            cid = int(pdf["_chunk_id"].iloc[0])
+            pdf = pdf.sort_values("_row_id")
+            row_ids = pdf["_row_id"].to_numpy()
+            lo = cid * chunk_rows
+            start, stop = max(lo, first_row), min(lo + chunk_rows, n_rows)
+            if len(pdf) != stop - start or row_ids[0] != start or (
+                np.diff(row_ids) != 1
+            ).any():
+                raise ValueError(
+                    f"chunk {cid}: non-contiguous row ids "
+                    f"[{row_ids[0]}..{row_ids[-1]}], n={len(pdf)}, "
+                    f"expected {stop - start} from {start}"
+                )
+            old = None
+            if start > lo:
+                # the boundary chunk: merge the store's trailing partial
+                # rows (bounded: < one chunk), read through the chunk reader
+                g = zarrv3.open_group(group_dir)
+                old = {n: g.arrays[n].read_range(lo, start) for n in names}
+            # pad EVERY partial chunk to the full chunk_shape, including a
+            # single-chunk store: the metadata keeps chunk_shape=chunk_rows,
+            # and zarr v3 requires edge chunks to be full-size fill-padded —
+            # strict readers (e.g. the zarrs crate the reference builds on)
+            # fail decode on short buffers
+            n_vals = stop - lo
+            pad = chunk_rows - n_vals
+            stats = {}
+            for name in names:
+                spec = specs[name]
+                vals = _series_to_vals(pdf[name], spec, name, cid, null_fill)
+                if old is not None:
+                    if spec["is_string"]:
+                        vals = list(old[name]) + vals
+                    else:
+                        prev = np.asarray(old[name]).astype(spec["np_dtype"])
+                        vals = np.concatenate([prev, vals])
+                if len(vals) != n_vals:
+                    raise ValueError(
+                        f"chunk {cid} column {name!r}: merged {len(vals)} "
+                        f"values, expected {n_vals}"
+                    )
+                stats[name] = zarrv3.chunk_stats(vals, spec["is_string"])
+                if inner_rows is None:
+                    payload = zarrv3.encode_chunk_payload(
+                        vals, spec["is_string"], pad, zstd_level
+                    )
+                else:
+                    payload = zarrv3.encode_shard_payload(
+                        vals,
+                        spec["is_string"],
+                        inner_rows,
+                        chunk_rows,
+                        zstd_level,
+                        index_crc32c=index_crc32c,
+                    )
+                _write_chunk_file(group_dir, name, cid, payload)
+            return pd.DataFrame(
+                {"chunk_id": [cid], "n": [n_vals], "stats": [json.dumps(stats)]}
+            )
+
+        done = (
+            rows.groupBy("_chunk_id")
+            .applyInPandas(write_chunk, "chunk_id long, n long, stats string")
+            .collect()
+        )
+    finally:
+        df.unpersist()
+    return n_new, {r.chunk_id: r for r in done}
+
+
+def _commit(
+    group_dir: str,
+    specs: dict,
+    done: dict,
+    first_row: int,
+    n_rows: int,
+    chunk_rows: int,
+    kept: dict,
+    **layout,
+) -> None:
+    """Phase 4 of the write core: check that the chunks from the one
+    holding ``first_row`` on were all written with every row, then stage
+    each array's ``zarr.json`` as ``zarr.json.pending`` and flip them with
+    bare renames — shrinking the multi-array commit window from N
+    encode+write cycles to N atomic renames, so a concurrent open_group
+    (the stream reader's latestOffset) has the smallest possible chance of
+    seeing disagreeing shapes. ``kept[name]`` is the ``(min, max)`` stats
+    of the untouched chunks before it, or None to drop the array's stats.
+    ``layout`` is ``zstd_level``/``inner_rows``/``index_crc32c``."""
+    from zarr_datafusion_search_spark.sources import zarrv3
+
+    first = first_row // chunk_rows
+    expected = list(range(first, -(-n_rows // chunk_rows)))
+    if sorted(done) != expected:
+        raise ValueError(
+            f"chunk coverage mismatch: expected {expected}, got {sorted(done)}"
+        )
+    written = sum(r.n for r in done.values())
+    if written != n_rows - first * chunk_rows:
+        raise ValueError(
+            f"row count mismatch: wrote {written}, expected "
+            f"{n_rows - first * chunk_rows}"
+        )
+    new_stats = [json.loads(done[c].stats) for c in expected]
+    for name, spec in specs.items():
+        stat_min = stat_max = None
+        if kept[name] is not None:
+            stat_min = list(kept[name][0]) + [s[name][0] for s in new_stats]
+            stat_max = list(kept[name][1]) + [s[name][1] for s in new_stats]
+        zarrv3.write_array_metadata(
+            os.path.join(group_dir, name),
+            n_rows=n_rows,
+            chunk_rows=chunk_rows,
+            stat_min=stat_min,
+            stat_max=stat_max,
+            # the chunk grid stays as requested even for a store smaller
+            # than one chunk, so later appends keep the intended chunking
+            clamp_chunk=False,
+            filename="zarr.json.pending",
+            **spec,
+            **layout,
+        )
+    for name in specs:
+        arr_dir = os.path.join(group_dir, name)
+        os.replace(
+            os.path.join(arr_dir, "zarr.json.pending"),
+            os.path.join(arr_dir, "zarr.json"),
+        )
+
+
 def write_zarr_distributed(
     df: DataFrame,
     path: str,
@@ -151,137 +322,27 @@ def write_zarr_distributed(
     compressed ``inner_rows`` chunks plus a crc32c-checksummed index — the
     object-count-friendly layout for 100 TB stores (same read granularity,
     ~chunk_rows/inner_rows fewer objects)."""
-    import numpy as np
-
     from zarr_datafusion_search_spark.sources import zarrv3
     from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrWriter
 
     if inner_rows is not None and chunk_rows % inner_rows != 0:
         raise ValueError("chunk_rows (shard size) must be a multiple of inner_rows")
-    schema = df.schema
-    col_specs = {f.name: ZarrWriter._col_spec(f) for f in schema.fields}
+    specs = {f.name: ZarrWriter._col_spec(f) for f in df.schema.fields}
     null_fill = dict(null_fill or {})
     for c in null_fill:
-        if c not in col_specs:
+        if c not in specs:
             raise KeyError(f"null_fill column {c!r} not in DataFrame")
-
-    if os.path.exists(os.path.join(path, "zarr.json")):
-        if not overwrite:
-            raise ValueError(
-                f"zarr store already exists at {path}; pass overwrite=True "
-                "to replace it, or use append_zarr_distributed() to add rows"
-            )
-        import shutil
-
-        shutil.rmtree(path)
-
-    # ---- phase 1: global row ids -------------------------------------
-    df = df.persist()
-    try:
-        rows, total = _assign_row_ids(df, chunk_rows, start=0)
-        n_chunks = max(1, -(-total // chunk_rows))
-
-        # ---- driver: store/group skeleton (metadata only) ------------
-        group_dir = zarrv3.init_group(path, group_path)
-        for f in schema.fields:
-            os.makedirs(os.path.join(group_dir, f.name, "c"), exist_ok=True)
-
-        # ---- phase 2+3: shuffle on chunk id, task-side chunk writes --
-        names = [f.name for f in schema.fields]
-        specs = col_specs
-        last_chunk = n_chunks - 1
-        last_rows = total - last_chunk * chunk_rows
-
-        def write_chunk(pdf):
-            import pandas as pd
-
-            cid = int(pdf["_chunk_id"].iloc[0])
-            pdf = pdf.sort_values("_row_id")
-            row_ids = pdf["_row_id"].to_numpy()
-            expect = last_rows if cid == last_chunk else chunk_rows
-            if len(pdf) != expect or row_ids[0] != cid * chunk_rows or (
-                len(row_ids) > 1 and (np.diff(row_ids) != 1).any()
-            ):
-                raise ValueError(
-                    f"chunk {cid}: non-contiguous row ids "
-                    f"[{row_ids[0]}..{row_ids[-1]}], n={len(pdf)}, "
-                    f"expected {expect} from {cid * chunk_rows}"
-                )
-            # pad EVERY partial chunk to the full chunk_shape, including a
-            # single-chunk store: with clamp_chunk=False the metadata says
-            # chunk_shape=chunk_rows, and zarr v3 requires edge chunks to
-            # be full-size fill-padded — strict readers (e.g. the zarrs
-            # crate the reference builds on) fail decode on short buffers
-            pad = chunk_rows - expect if expect < chunk_rows else 0
-            stats = {}
-            for name in names:
-                spec = specs[name]
-                vals = _series_to_vals(pdf[name], spec, name, cid, null_fill)
-                lo, hi = zarrv3.chunk_stats(vals, spec["is_string"])
-                stats[name] = [lo, hi]
-                if inner_rows is not None:
-                    payload = zarrv3.encode_shard_payload(
-                        vals,
-                        spec["is_string"],
-                        inner_rows,
-                        chunk_rows,
-                        zstd_level,
-                        index_crc32c=True,
-                    )
-                else:
-                    payload = zarrv3.encode_chunk_payload(
-                        vals, spec["is_string"], pad, zstd_level
-                    )
-                _write_chunk_file(group_dir, name, cid, payload)
-            return pd.DataFrame(
-                {"chunk_id": [cid], "n": [expect], "stats": [json.dumps(stats)]}
-            )
-
-        done = (
-            rows.groupBy("_chunk_id")
-            .applyInPandas(write_chunk, "chunk_id long, n long, stats string")
-            .collect()
-        )
-    finally:
-        df.unpersist()
-
-    # ---- phase 4: metadata-only commit -------------------------------
-    got = {r.chunk_id: r for r in done}
-    missing = [c for c in range(n_chunks) if c not in got] if total else []
-    if missing or len(got) != (n_chunks if total else 0):
-        raise ValueError(
-            f"chunk coverage mismatch: expected {n_chunks}, got "
-            f"{sorted(got)}; missing {missing}"
-        )
-    written = sum(r.n for r in got.values())
-    if written != total:
-        raise ValueError(f"row count mismatch: wrote {written}, expected {total}")
-    for f in schema.fields:
-        if total:
-            per_chunk = [json.loads(got[c].stats)[f.name] for c in range(n_chunks)]
-            stat_min = [s[0] for s in per_chunk]
-            stat_max = [s[1] for s in per_chunk]
-        else:
-            stat_min, stat_max = [], []
-        zarrv3.write_array_metadata(
-            os.path.join(group_dir, f.name),
-            n_rows=total,
-            chunk_rows=chunk_rows,
-            is_string=col_specs[f.name]["is_string"],
-            np_dtype=col_specs[f.name].get("np_dtype"),
-            datetime_unit=col_specs[f.name].get("datetime_unit"),
-            zstd_level=zstd_level,
-            stat_min=stat_min,
-            stat_max=stat_max,
-            inner_rows=inner_rows,
-            index_crc32c=inner_rows is not None,
-            # this writer's physical layout keeps the requested chunk grid
-            # (one unpadded partial chunk when total < chunk_rows), so the
-            # metadata must NOT clamp chunk_shape to the row count — a store
-            # created from a small first batch keeps its intended chunking
-            # for later appends
-            clamp_chunk=False,
-        )
+    group_dir = zarrv3._prepare_store(path, group_path, overwrite, "overwrite=True")
+    layout = dict(
+        zstd_level=zstd_level,
+        inner_rows=inner_rows,
+        index_crc32c=inner_rows is not None,
+    )
+    total, done = _write_chunks(
+        df, group_dir, specs, null_fill, chunk_rows, 0, **layout
+    )
+    kept = {name: ([], []) for name in specs}
+    _commit(group_dir, specs, done, 0, total, chunk_rows, kept, **layout)
     return total
 
 
@@ -332,23 +393,19 @@ def append_zarr_distributed(
     refuses and says so) — but append IS implementable with bounded extra
     I/O, and a landing zone wants it: only the boundary chunk (the
     existing store's final, possibly partial, chunk) must be rewritten;
-    every other existing chunk's bytes are untouched. The plan is the
-    distributed writer's (global row ids offset by the existing row
-    count, one shuffle on chunk id, executors write whole chunks,
-    metadata-only commit) with one twist: the task that owns the boundary
-    chunk reads the store's trailing partial rows through the chunk
-    reader, prepends them to its new rows, and writes the merged chunk.
-    The commit extends shape and per-chunk stats; a failed job leaves the
-    old ``zarr.json`` (and therefore the old logical table) fully intact,
-    because data files for chunks >= the boundary are not referenced
-    until the metadata flips.
+    every other existing chunk's bytes are untouched. This is the write
+    core with the first row at the store's row count: the task that owns
+    the boundary chunk reads the store's trailing partial rows through the
+    chunk reader, prepends them to its new rows, and writes the merged
+    chunk. The commit extends shape and per-chunk stats; a failed job
+    leaves the old ``zarr.json`` (and therefore the old logical table)
+    fully intact, because data files for chunks >= the boundary are not
+    referenced until the metadata flips.
 
     Schema must match the store (same column names; Spark types mapping
     to each array's exact zarr dtype). ``zstd_level``/shard layout are
     inherited from the store (``zstd_level`` overrides if given).
     """
-    import numpy as np
-
     from zarr_datafusion_search_spark.sources import zarrv3
     from zarr_datafusion_search_spark.sources.zarr_datasource import ZarrWriter
 
@@ -361,25 +418,12 @@ def append_zarr_distributed(
             f"append schema mismatch: store has {names}, DataFrame has "
             f"{sorted(df.columns)}"
         )
-    schema = df.schema
-    specs = {f.name: ZarrWriter._col_spec(f) for f in schema.fields}
-    null_fill = dict(null_fill or {})
+    specs = {f.name: ZarrWriter._col_spec(f) for f in df.schema.fields}
 
     # dtype compatibility: the spec must regenerate the array's data_type
     for name in names:
-        meta = group.arrays[name]
-        spec = specs[name]
-        if spec["is_string"]:
-            expected = "string"
-        elif spec.get("datetime_unit"):
-            expected = zarrv3.dtype_to_json(
-                zarrv3.ZarrDType("datetime64", unit=spec["datetime_unit"])
-            )
-        else:
-            expected = zarrv3.dtype_to_json(
-                zarrv3._numpy_to_zarr_dtype(np.empty(0, spec["np_dtype"]))
-            )
-        actual = zarrv3.dtype_to_json(meta.dtype)
+        expected = zarrv3._column_json(**specs[name])[0]
+        actual = zarrv3.dtype_to_json(group.arrays[name].dtype)
         if expected != actual:
             raise ValueError(
                 f"append dtype mismatch on {name!r}: store is {actual}, "
@@ -397,10 +441,6 @@ def append_zarr_distributed(
                 f"({m.n_rows}x{m.chunk_rows} vs {old_total}x{chunk_rows})"
             )
     sharding = meta0.sharding
-    inner_rows = sharding["chunk_shape"][0] if sharding else None
-    index_crc32c = bool(sharding) and any(
-        c.get("name") == "crc32c" for c in (sharding.get("index_codecs") or [])
-    )
     if zstd_level is None:
         chain = (sharding or {}).get("codecs") or meta0.codecs
         zstd_level = next(
@@ -411,179 +451,30 @@ def append_zarr_distributed(
             ),
             0,
         )
+    index_codecs = (sharding or {}).get("index_codecs") or []
+    layout = dict(
+        zstd_level=zstd_level,
+        inner_rows=sharding["chunk_shape"][0] if sharding else None,
+        index_crc32c=any(c.get("name") == "crc32c" for c in index_codecs),
+    )
 
     group_rel = group_path.strip("/")
-    group_dir = (
-        os.path.join(zarrv3.normalize_store_path(path), group_rel)
-        if group_rel
-        else zarrv3.normalize_store_path(path)
+    group_dir = zarrv3.normalize_store_path(path)
+    if group_rel:
+        group_dir = os.path.join(group_dir, group_rel)
+    n_new, done = _write_chunks(
+        df, group_dir, specs, dict(null_fill or {}), chunk_rows, old_total, **layout
     )
-    boundary = old_total // chunk_rows
-    partial = old_total % chunk_rows
-
-    # ---- phase 1: global row ids, offset by the existing row count ----
-    df = df.persist()
-    try:
-        rows, n_new = _assign_row_ids(df, chunk_rows, start=old_total)
-        if n_new == 0:
-            return old_total
-        new_total = old_total + n_new
-        n_chunks_new = -(-new_total // chunk_rows)
-        last_chunk = n_chunks_new - 1
-        store_path = path
-        _specs = specs
-        _names = names
-        _nf = null_fill
-        _gp = group_path
-
-        def write_chunk(pdf):
-            import pandas as pd
-
-            cid = int(pdf["_chunk_id"].iloc[0])
-            pdf = pdf.sort_values("_row_id")
-            row_ids = pdf["_row_id"].to_numpy()
-            start_new = max(cid * chunk_rows, old_total)
-            stop = min((cid + 1) * chunk_rows, new_total)
-            expect_new = stop - start_new
-            if len(pdf) != expect_new or row_ids[0] != start_new or (
-                len(row_ids) > 1 and (np.diff(row_ids) != 1).any()
-            ):
-                raise ValueError(
-                    f"append chunk {cid}: non-contiguous row ids "
-                    f"[{row_ids[0]}..{row_ids[-1]}], n={len(pdf)}, "
-                    f"expected {expect_new} from {start_new}"
-                )
-            n_vals = stop - cid * chunk_rows
-            # full-size fill-padding for ANY partial chunk (see the batch
-            # writer): zarr v3 interop requires it even for 1-chunk stores
-            pad = chunk_rows - n_vals if n_vals < chunk_rows else 0
-            prev = None
-            if cid == boundary and partial:
-                # merge the store's trailing partial rows (bounded: < one
-                # chunk), read through the ordinary chunk reader
-                g = zarrv3.open_group(store_path, _gp)
-                prev = {
-                    n: g.arrays[n].read_range(cid * chunk_rows, old_total)
-                    for n in _names
-                }
-            stats = {}
-            for name in _names:
-                spec = _specs[name]
-                vals = _series_to_vals(pdf[name], spec, name, cid, _nf)
-                if prev is not None:
-                    old_vals = prev[name]
-                    if spec["is_string"]:
-                        vals = list(old_vals) + vals
-                    elif spec.get("datetime_unit"):
-                        vals = np.concatenate(
-                            [
-                                np.asarray(old_vals)
-                                .astype("datetime64[us]")
-                                .astype("<i8"),
-                                vals,
-                            ]
-                        )
-                    else:
-                        vals = np.concatenate(
-                            [np.asarray(old_vals).astype(spec["np_dtype"]), vals]
-                        )
-                if len(vals) != n_vals:
-                    raise ValueError(
-                        f"append chunk {cid} column {name!r}: merged "
-                        f"{len(vals)} values, expected {n_vals}"
-                    )
-                lo, hi = zarrv3.chunk_stats(vals, spec["is_string"])
-                stats[name] = [lo, hi]
-                if inner_rows is not None:
-                    payload = zarrv3.encode_shard_payload(
-                        vals,
-                        spec["is_string"],
-                        inner_rows,
-                        chunk_rows,
-                        zstd_level,
-                        index_crc32c=index_crc32c,
-                    )
-                else:
-                    payload = zarrv3.encode_chunk_payload(
-                        vals, spec["is_string"], pad, zstd_level
-                    )
-                _write_chunk_file(group_dir, name, cid, payload)
-            return pd.DataFrame(
-                {
-                    "chunk_id": [cid],
-                    "n": [n_vals],
-                    "stats": [json.dumps(stats)],
-                }
-            )
-
-        done = (
-            rows.groupBy("_chunk_id")
-            .applyInPandas(write_chunk, "chunk_id long, n long, stats string")
-            .collect()
-        )
-    finally:
-        df.unpersist()
-
-    # ---- metadata-only commit: extend shape + chunk stats -------------
-    got = {r.chunk_id: r for r in done}
-    expected_cids = list(range(boundary if partial else old_total // chunk_rows,
-                               n_chunks_new))
-    # chunks fully covered by old data are never touched
-    expected_cids = [c for c in expected_cids if (c + 1) * chunk_rows > old_total]
-    missing = [c for c in expected_cids if c not in got]
-    if missing or set(got) != set(expected_cids):
-        raise ValueError(
-            f"append chunk coverage mismatch: expected {expected_cids}, "
-            f"got {sorted(got)}"
-        )
-    written = sum(r.n for r in got.values())
-    expected_written = new_total - (boundary if partial else old_total // chunk_rows) * chunk_rows
-    if written != expected_written:
-        raise ValueError(
-            f"append row count mismatch: wrote {written}, expected "
-            f"{expected_written}"
-        )
-    for name in _names:
-        meta = group.arrays[name]
-        old_stats = meta.chunk_stats
-        keep = boundary  # chunks [0, boundary) keep their stats verbatim
-        if old_stats and len(old_stats.get("min", [])) >= keep:
-            stat_min = list(old_stats["min"][:keep])
-            stat_max = list(old_stats["max"][:keep])
-        elif keep == 0:
-            stat_min, stat_max = [], []
-        else:
-            stat_min = stat_max = None  # old store had no stats: drop them
-        if stat_min is not None:
-            for c in range(keep, n_chunks_new):
-                s = json.loads(got[c].stats)[name]
-                stat_min.append(s[0])
-                stat_max.append(s[1])
-        spec = specs[name]
-        # stage: all arrays' new metadata lands as .pending first, then a
-        # bare-rename loop flips them — shrinking the multi-array commit
-        # window from N encode+write cycles to N atomic renames, so a
-        # concurrent open_group (the stream reader's latestOffset) has the
-        # smallest possible chance of seeing disagreeing shapes
-        zarrv3.write_array_metadata(
-            os.path.join(group_dir, name),
-            n_rows=new_total,
-            chunk_rows=chunk_rows,
-            is_string=spec["is_string"],
-            np_dtype=spec.get("np_dtype"),
-            datetime_unit=spec.get("datetime_unit"),
-            zstd_level=zstd_level,
-            stat_min=stat_min,
-            stat_max=stat_max,
-            inner_rows=inner_rows,
-            index_crc32c=index_crc32c,
-            clamp_chunk=False,
-            filename="zarr.json.pending",
-        )
-    for name in _names:
-        arr_dir = os.path.join(group_dir, name)
-        os.replace(
-            os.path.join(arr_dir, "zarr.json.pending"),
-            os.path.join(arr_dir, "zarr.json"),
-        )
-    return new_total
+    if n_new == 0:
+        return old_total
+    # chunks before the boundary keep their stats verbatim; a store
+    # without (complete) stats loses them
+    keep = old_total // chunk_rows
+    kept = {}
+    for name in names:
+        stats = group.arrays[name].chunk_stats or {"min": [], "max": []}
+        ok = len(stats["min"]) >= keep
+        kept[name] = (stats["min"][:keep], stats["max"][:keep]) if ok else None
+    n_rows = old_total + n_new
+    _commit(group_dir, specs, done, old_total, n_rows, chunk_rows, kept, **layout)
+    return n_rows

@@ -401,9 +401,9 @@ class ZarrArrayMeta:
             c_len = min(crows, self.n_rows - c_start)
             path = self.chunk_file(ci)
             try:
-                raw = _read_bytes(path)  # missing chunk -> fill value
-            except (FileNotFoundError, OSError):
-                raw = None
+                raw = _read_bytes(path)
+            except FileNotFoundError:
+                raw = None  # only a missing key means fill value in zarr
             vals = self.decode_chunk(raw, c_len)
             lo = max(start, c_start) - c_start
             hi = min(stop, c_start + c_len) - c_start
@@ -586,22 +586,8 @@ def write_group(
     reference fixture (data/zarr_store.zarr): ``vlen-utf8``+``zstd`` for
     strings, ``bytes``(little)+``zstd`` for fixed-width types.
     """
-    group_rel = group_path.strip("/")
-    os.makedirs(store_path, exist_ok=True)
-    _write_json(
-        os.path.join(store_path, "zarr.json"),
-        {"zarr_format": 3, "node_type": "group", "attributes": {}},
-    )
-    group_dir = os.path.join(store_path, group_rel) if group_rel else store_path
-    if group_rel:
-        os.makedirs(group_dir, exist_ok=True)
-        _write_json(
-            os.path.join(group_dir, "zarr.json"),
-            {"zarr_format": 3, "node_type": "group", "attributes": {}},
-        )
-    lengths = set()
-    for name, values in columns.items():
-        lengths.add(len(values))
+    group_dir = init_group(store_path, group_path)
+    lengths = {len(v) for v in columns.values()}
     if len(lengths) > 1:
         raise ZarrError(f"columns disagree on length: {lengths}")
     for name, values in columns.items():
@@ -645,6 +631,26 @@ def chunk_stats(vals, is_string: bool):
     return arr.min().item(), arr.max().item()
 
 
+def _column_json(
+    is_string: bool,
+    np_dtype=None,
+    datetime_unit: str | None = None,
+    zstd_level: int = 0,
+) -> tuple[Any, Any, list[dict]]:
+    """``(data_type, fill_value, codecs)`` of one column spec: the members
+    of ``zarr.json`` every writer derives from it. ``codecs`` is the
+    array->bytes + ``zstd`` chain (a sharded array's inner chain)."""
+    zstd = {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}}
+    if is_string:
+        return "string", "", [{"name": "vlen-utf8", "configuration": {}}, zstd]
+    if datetime_unit:
+        zdt, fill = ZarrDType("datetime64", unit=datetime_unit), -9223372036854775808
+    else:
+        zdt, fill = _numpy_to_zarr_dtype(np.empty(0, np_dtype)), 0
+    codecs = [{"name": "bytes", "configuration": {"endian": "little"}}, zstd]
+    return dtype_to_json(zdt), fill, codecs
+
+
 def write_array_metadata(
     arr_dir: str,
     n_rows: int,
@@ -672,25 +678,7 @@ def write_array_metadata(
     first batch keeps its intended chunk size for later appends.
     ``filename`` lets a multi-array commit stage every array's metadata
     first (``zarr.json.pending``) and flip them with bare renames."""
-    if is_string:
-        dt: Any = "string"
-        codecs = [
-            {"name": "vlen-utf8", "configuration": {}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
-        fill: Any = ""
-    else:
-        if datetime_unit:
-            zdt = ZarrDType("datetime64", unit=datetime_unit)
-            fill = -9223372036854775808
-        else:
-            zdt = _numpy_to_zarr_dtype(np.empty(0, np_dtype))
-            fill = 0
-        dt = dtype_to_json(zdt)
-        codecs = [
-            {"name": "bytes", "configuration": {"endian": "little"}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
+    dt, fill, codecs = _column_json(is_string, np_dtype, datetime_unit, zstd_level)
     if inner_rows is not None:
         codecs = [
             sharding_codec_config(inner_rows, is_string, zstd_level, index_crc32c)
@@ -829,6 +817,34 @@ def init_group(store_path: str, group_path: str) -> str:
     return group_dir
 
 
+def _check_store(path: str, overwrite: bool, how: str) -> bool:
+    """The writers' overwrite guard: True when a store exists at ``path``;
+    raises unless ``overwrite``. ``how`` names the caller's overwrite
+    switch in the error."""
+    exists = os.path.exists(os.path.join(path, "zarr.json"))
+    if exists and not overwrite:
+        raise ValueError(
+            f"zarr store already exists at {path}; use {how} to replace it, "
+            "or append_zarr_distributed() to add rows"
+        )
+    return exists
+
+
+def _prepare_store(
+    path: str, group_path: str, overwrite: bool, how: str, keep: tuple = ()
+) -> str:
+    """Guard an existing store, clear its entries (except ``keep``) for an
+    overwrite and build the group skeleton; returns the group dir."""
+    if _check_store(path, overwrite, how):
+        import shutil
+
+        for entry in os.listdir(path):
+            if entry not in keep:
+                p = os.path.join(path, entry)
+                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+    return init_group(path, group_path)
+
+
 def _write_json(path: str, doc: dict) -> None:
     # atomic: a crash mid-dump must never leave a truncated zarr.json —
     # metadata IS the commit record, so it flips all-or-nothing
@@ -851,22 +867,24 @@ def _numpy_to_zarr_dtype(arr: np.ndarray) -> ZarrDType:
     raise ZarrError(f"unsupported numpy dtype for writing: {arr.dtype}")
 
 
+def _values_spec(values: Any) -> dict:
+    """Column spec of an in-memory column: numpy arrays are fixed-width
+    (validated eagerly), anything else is a list of strings."""
+    if not isinstance(values, np.ndarray):
+        return {"is_string": True}
+    zdt = _numpy_to_zarr_dtype(values)
+    return {"is_string": False, "np_dtype": values.dtype, "datetime_unit": zdt.unit}
+
+
 def _write_array(
     group_dir: str, name: str, values: Any, chunk_rows: int, zstd_level: int
 ) -> None:
-    is_string = not isinstance(values, np.ndarray)
-    kwargs: dict = {"is_string": is_string}
-    if not is_string:
-        if values.dtype.kind == "M":
-            kwargs["datetime_unit"] = np.datetime_data(values.dtype)[0]
-        kwargs["np_dtype"] = values.dtype
-        _numpy_to_zarr_dtype(values)  # validate eagerly
     w = ChunkedArrayWriter(
         group_dir,
         name,
         chunk_rows=min(chunk_rows, max(len(values), 1)),
         zstd_level=zstd_level,
-        **kwargs,
+        **_values_spec(values),
     )
     if len(values):
         w.append(values)
@@ -909,66 +927,25 @@ def _write_sharded_array(
     inner_rows: int,
     zstd_level: int,
 ) -> None:
-    is_string = not isinstance(values, np.ndarray)
+    spec = _values_spec(values)
     n = len(values)
-    if is_string:
-        dt_json: Any = "string"
-        inner_codecs = [
-            {"name": "vlen-utf8", "configuration": {}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
-        fill: Any = ""
-    else:
-        if values.dtype.kind == "M":
-            zdt = ZarrDType("datetime64", unit=np.datetime_data(values.dtype)[0])
-            fill = -9223372036854775808
-        else:
-            zdt = _numpy_to_zarr_dtype(values)
-            fill = 0
-        dt_json = dtype_to_json(zdt)
-        inner_codecs = [
-            {"name": "bytes", "configuration": {"endian": "little"}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
     arr_dir = os.path.join(group_dir, name)
     os.makedirs(os.path.join(arr_dir, "c"), exist_ok=True)
-    _write_json(
-        os.path.join(arr_dir, "zarr.json"),
-        {
-            "shape": [n],
-            "data_type": dt_json,
-            "chunk_grid": {
-                "name": "regular",
-                "configuration": {"chunk_shape": [shard_rows]},
-            },
-            "chunk_key_encoding": {
-                "name": "default",
-                "configuration": {"separator": "/"},
-            },
-            "fill_value": fill,
-            "codecs": [
-                {
-                    "name": "sharding_indexed",
-                    "configuration": {
-                        "chunk_shape": [inner_rows],
-                        "codecs": inner_codecs,
-                        "index_codecs": [
-                            {"name": "bytes", "configuration": {"endian": "little"}}
-                        ],
-                        "index_location": "end",
-                    },
-                }
-            ],
-            "attributes": {},
-            "zarr_format": 3,
-            "node_type": "array",
-            "storage_transformers": [],
-        },
+    write_array_metadata(
+        arr_dir,
+        n_rows=n,
+        chunk_rows=shard_rows,
+        zstd_level=zstd_level,
+        inner_rows=inner_rows,
+        **spec,
     )
-    for si, s_lo in enumerate(range(0, max(n, 1), shard_rows) if n else []):
-        s_hi = min(s_lo + shard_rows, n)
+    for si, s_lo in enumerate(range(0, n, shard_rows)):
         blob = encode_shard_payload(
-            values[s_lo:s_hi], is_string, inner_rows, shard_rows, zstd_level
+            values[s_lo : s_lo + shard_rows],
+            spec["is_string"],
+            inner_rows,
+            shard_rows,
+            zstd_level,
         )
         with open(os.path.join(arr_dir, "c", str(si)), "wb") as f:
             f.write(blob)
@@ -1014,16 +991,7 @@ def sharding_codec_config(
 ) -> dict:
     """The ``sharding_indexed`` codec entry matching
     :func:`encode_shard_payload`'s layout."""
-    if is_string:
-        inner = [
-            {"name": "vlen-utf8", "configuration": {}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
-    else:
-        inner = [
-            {"name": "bytes", "configuration": {"endian": "little"}},
-            {"name": "zstd", "configuration": {"level": zstd_level, "checksum": False}},
-        ]
+    inner = _column_json(is_string, zstd_level=zstd_level)[2]
     index_codecs = [{"name": "bytes", "configuration": {"endian": "little"}}]
     if index_crc32c:
         index_codecs.append({"name": "crc32c", "configuration": {}})
