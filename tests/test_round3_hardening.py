@@ -8,7 +8,9 @@ import pytest
 from zarr_datafusion_search_spark.functions import media_codecs as mc
 from zarr_datafusion_search_spark.operators import multimodal, similarity
 from zarr_datafusion_search_spark.operators.cache import (
+    operator_cache_scope,
     release_operator_caches,
+    tracked_persist,
 )
 from zarr_datafusion_search_spark.operators.dedup import minhash_lsh_pairs
 from zarr_datafusion_search_spark.sources.metadata import metadata_row_count
@@ -179,6 +181,20 @@ def test_dedup_caches_released(spark, sf_dir):
     assert released >= 2  # hashed shingles + band signatures
     after = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
     assert after - before == set(), "no cached blocks may outlive release"
+
+
+def test_cache_scope_releases_only_its_own_handles(spark):
+    outer = tracked_persist(spark.range(10).selectExpr("id * 2 AS v"))
+    with operator_cache_scope():
+        inner = tracked_persist(spark.range(10).selectExpr("id * 3 AS v"))
+        with operator_cache_scope():
+            innermost = tracked_persist(spark.range(10).selectExpr("id * 5 AS v"))
+        assert not innermost.is_cached
+        assert inner.is_cached and outer.is_cached
+    assert not inner.is_cached
+    assert outer.is_cached, "a scope must not release a handle tracked outside it"
+    assert release_operator_caches() == 1  # scoped handles are already gone
+    assert not outer.is_cached
 
 
 # ---------------------------------------------------------------------------

@@ -14,22 +14,32 @@ from __future__ import annotations
 
 import logging
 from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
 
 _log = logging.getLogger(__name__)
 
+# every tracked handle, for release_operator_caches
 _PERSISTED: list[DataFrame] = []
+# the handles tracked inside the innermost operator_cache_scope, if any
+_SCOPE: ContextVar[list[DataFrame] | None] = ContextVar(
+    "operator_cache_scope", default=None
+)
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
     """``df.persist()`` with the handle recorded for later release."""
     _PERSISTED.append(df.persist())
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append(df)
     return df
 
 
 def release_operator_caches() -> int:
-    """Unpersist every tracked cache; returns how many were released.
+    """Unpersist every tracked cache, scoped or not; returns how many were
+    released.
 
     Safe to call at any time: caches exist to share work WITHIN one
     pipeline's stages; cross-pipeline reuse is CacheManager plan
@@ -47,12 +57,20 @@ def operator_cache_scope():
 
         with operator_cache_scope():
             minhash_lsh_pairs(docs).write.parquet(out)
-        # all tracked caches released here
-    """
+        # the caches tracked inside the block are released here
+
+    Only handles tracked inside the block (in the same thread or context)
+    are released; caches of an enclosing pipeline stay pinned."""
+    handles: list[DataFrame] = []
+    token = _SCOPE.set(handles)
     try:
         yield
     finally:
-        release_operator_caches()
+        _SCOPE.reset(token)
+        mine = {id(df) for df in handles}
+        _PERSISTED[:] = [df for df in _PERSISTED if id(df) not in mine]
+        for df in handles:
+            df.unpersist()
 
 
 def _auto_barrier_mode(master: str) -> str:

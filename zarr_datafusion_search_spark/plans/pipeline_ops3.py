@@ -966,19 +966,14 @@ _ZTAIL_RUN = [0]
 def streaming_zarr_tail_counts(spark: SparkSession, sf: str) -> DataFrame:
     import tempfile
 
-    from zarr_datafusion_search_spark.sources.zarr_datasource import (
-        ZarrDataSource,
-    )
     from zarr_datafusion_search_spark.sources.zarr_sink import (
         append_zarr_distributed,
         write_zarr_distributed,
     )
+    from zarr_datafusion_search_spark.sources.zarr_table import _ensure_registered
     from zarr_datafusion_search_spark.streaming.events import run_to_memory_sink
 
-    try:
-        spark.dataSource.register(ZarrDataSource)
-    except Exception:
-        pass  # already registered in this session
+    _ensure_registered(spark)
     docs = table(spark, sf, "documents").select("doc_id", "lang", "n_chars")
     store = tempfile.mkdtemp(prefix="zdss_tail_") + "/docs.zarr"
     write_zarr_distributed(

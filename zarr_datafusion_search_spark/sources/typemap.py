@@ -84,6 +84,23 @@ def zarr_to_arrow_type(dtype: ZarrDType) -> pa.DataType:
     raise ZarrError(f"unsupported Zarr dtype: {dtype}")
 
 
+def zarr_to_arrow_array(dtype: ZarrDType, vals) -> pa.Array:
+    """Decoded values of one Zarr array -> an Arrow array of
+    :func:`zarr_to_arrow_type`."""
+    if dtype.kind == "datetime64":
+        # int64 ticks in the array's unit -> reinterpret, then rescale to
+        # Spark's microsecond timestamps
+        return pa.array(vals).cast(pa.timestamp(dtype.unit)).cast(_TS_ARROW[dtype.unit])
+    if dtype.kind == "raw":
+        # numpy void arrays aren't Arrow-convertible directly
+        return pa.array([bytes(v) for v in vals], type=pa.binary())
+    if dtype.kind == "bytes":
+        return pa.array(list(vals), type=pa.binary())
+    arr = pa.array(vals)
+    want = zarr_to_arrow_type(dtype)
+    return arr if arr.type == want else arr.cast(want)
+
+
 def group_schema(arrays: dict[str, ZarrDType]) -> T.StructType:
     """Sorted-by-name schema of a group, matching src/schema.rs:39."""
     return T.StructType(

@@ -11,12 +11,32 @@ whole-table-in-one-batch scan (src/table_provider.rs:193-220,237):
   (This is the design the reference's orphaned ``FileSource`` experiment was
   reaching for — src/source.rs:28-33.)
 - **Column pruning at the source**: only the Zarr arrays named in the read
-  schema are fetched and decoded (``option("columns", "a,b")`` or via
-  ``ZarrTable.to_df(columns=...)``); the reference stores the projection but
-  never uses it (src/table_provider.rs:228-229).
+  schema are fetched and decoded (a schema given to ``spark.read``, as
+  ``ZarrTable.to_df(columns=...)`` does, or ``option("columns", "a,b")``);
+  the reference stores the projection but never uses it
+  (src/table_provider.rs:228-229).
 - **Filter pushdown**: ``pushFilters`` claims simple comparison predicates
   and evaluates them on decoded Arrow batches before shipping rows to the
   JVM; the reference ignores ``_filters`` entirely (src/table_provider.rs:85).
+- **Streaming**: ``spark.readStream.format("zarr")`` tails a store that
+  ``zarr_sink.append_zarr_distributed`` grows (:class:`ZarrStreamReader`).
+
+One read core (:class:`_ZarrScan`) serves the batch and the stream reader:
+the group set-up, one range planner and one read loop.
+
+- *Planner*: ``[lo, hi)`` is split into pieces that end on a lead-chunk
+  boundary (the lead chunk is the largest chunk among the read columns), the
+  pieces a predicate accepts are kept (chunk pruning, batch reads only), and
+  adjacent kept pieces are coalesced up to the rows per partition.
+- *Fan-out rule*: an explicit ``partition_rows`` is used as given. The
+  default (:data:`DEFAULT_PARTITION_ROWS`) is capped at ``rows //
+  _TARGET_PARTS``, where ``rows`` is what is being planned: the whole store
+  for a batch read, the new rows for a micro-batch. So small reads still fan
+  out to about ``_TARGET_PARTS`` tasks, while big stores keep
+  ~``partition_rows``-sized tasks. Either value is rounded down to whole
+  lead chunks, and is at least one lead chunk.
+- *Read loop*: one Arrow batch per chunk-local slice of a partition,
+  starting mid-chunk when a micro-batch does, masked by the claimed filters.
 
 Usage::
 
@@ -28,10 +48,14 @@ Usage::
 
 from __future__ import annotations
 
+import datetime as _dt
+import functools
 import os
 from dataclasses import dataclass
+from fractions import Fraction
 from typing import Iterator, List, Sequence
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
@@ -58,14 +82,14 @@ from pyspark.sql.types import StructType
 from zarr_datafusion_search_spark.sources import zarrv3
 from zarr_datafusion_search_spark.sources.typemap import (
     group_schema,
-    zarr_to_arrow_type,
+    zarr_to_arrow_array,
 )
 
 # Default rows per input partition. Chosen so a partition of a wide-ish table
 # of scalar columns stays well under executor memory; tune per deployment with
 # option("partition_rows", ...).
 DEFAULT_PARTITION_ROWS = 1 << 21  # ~2M rows
-_TARGET_PARTS = 64  # default-mode fan-out floor for small stores
+_TARGET_PARTS = 64  # default-mode fan-out floor for small reads
 
 
 @dataclass
@@ -74,31 +98,66 @@ class RowRange(InputPartition):
     stop: int
 
 
-def _range_batch(group, columns, arrow_types, lo, hi):
-    """Decode one chunk-local row range of the group into an Arrow batch
-    (shared by the batch reader and the stream reader)."""
-    import pyarrow as pa
+# The claimed filter classes: class -> (``pyarrow.compute`` mask kernel,
+# chunk test over (stats min, stats max, value in the stats' domain) or None
+# when the stats cannot prune it).
+_FILTERS = {
+    EqualTo: ("equal", lambda mn, mx, v: mn <= v <= mx),
+    GreaterThan: ("greater", lambda mn, mx, v: mx > v),
+    GreaterThanOrEqual: ("greater_equal", lambda mn, mx, v: mx >= v),
+    LessThan: ("less", lambda mn, mx, v: mn < v),
+    LessThanOrEqual: ("less_equal", lambda mn, mx, v: mn <= v),
+    In: ("is_in", lambda mn, mx, vals: any(mn <= v <= mx for v in vals)),
+    IsNull: ("is_null", None),
+    IsNotNull: ("is_valid", None),
+    StringStartsWith: ("starts_with", None),
+    StringEndsWith: ("ends_with", None),
+    StringContains: ("match_substring", None),
+}
 
-    cols = []
-    for c in columns:
-        meta = group.arrays[c]
-        vals = meta.read_range(lo, hi)
-        if meta.dtype.kind == "datetime64":
-            # int64 ticks in the array's unit -> reinterpret, then
-            # rescale to Spark's microsecond timestamps
-            arr = pa.array(vals).cast(pa.timestamp(meta.dtype.unit))
-            arr = arr.cast(arrow_types[c])
-        elif meta.dtype.kind == "raw":
-            # numpy void arrays aren't Arrow-convertible directly
-            arr = pa.array([bytes(v) for v in vals], type=pa.binary())
-        elif meta.dtype.kind == "bytes":
-            arr = pa.array(list(vals), type=pa.binary())
+
+def _mask(batch: pa.RecordBatch, filters: List[Filter]) -> pa.Array:
+    """The rows of ``batch`` that pass every claimed filter."""
+    # imported here, not at module level: every Spark planning worker
+    # imports this module, and importing pyarrow.compute takes tens of ms
+    import pyarrow.compute as pc
+
+    masks = []
+    for f in filters:
+        if isinstance(f, (IsNull, IsNotNull)):
+            operands = ()
+        elif isinstance(f, In):
+            operands = (pa.array(list(f.value)),)
         else:
-            arr = pa.array(vals)
-            if arr.type != arrow_types[c]:
-                arr = arr.cast(arrow_types[c])
-        cols.append(arr)
-    return pa.record_batch(cols, names=columns)
+            operands = (f.value,)
+        kernel = getattr(pc, _FILTERS[type(f)][0])
+        masks.append(kernel(batch.column(f.attribute[0]), *operands))
+    return functools.reduce(pc.and_, masks)
+
+
+_TICKS_PER_US = {"s": Fraction(1, 10**6), "ms": Fraction(1, 10**3),
+                 "us": Fraction(1), "ns": Fraction(1000)}
+
+
+def _stat_value(v, unit: str | None):
+    """A filter value in the chunk stats' domain; None when it has none.
+
+    Datetime stats are integer ticks in the array's unit. Exact integer/
+    rational arithmetic only: float ``total_seconds()`` rounds (~0.25us at us
+    precision), which could push the value across a chunk's true min/max and
+    wrongly prune a boundary-matching chunk."""
+    if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
+        v = _dt.datetime(v.year, v.month, v.day)
+    if isinstance(v, _dt.datetime):
+        if v.tzinfo is not None:
+            v = v.replace(tzinfo=None) - v.utcoffset()
+        delta = v - _dt.datetime(1970, 1, 1)
+        ticks_us = (delta.days * 86_400 + delta.seconds) * 10**6 + delta.microseconds
+        ticks = ticks_us * _TICKS_PER_US[unit or "us"]
+        return int(ticks) if ticks.denominator == 1 else ticks
+    if isinstance(v, (int, float, str)):
+        return v
+    return None
 
 
 class ZarrDataSource(DataSource):
@@ -135,25 +194,19 @@ class ZarrDataSource(DataSource):
             fields = {c: fields[c] for c in keep}
         return group_schema(fields)
 
-    def reader(self, schema: StructType) -> "ZarrReader":
-        return ZarrReader(
-            path=self._path_option(),
-            group_path=self.options.get("group", "/"),
-            schema=schema,
-            partition_rows=int(
-                self.options.get("partition_rows", DEFAULT_PARTITION_ROWS)
-            ),
+    def _scan(self, cls, schema: StructType):
+        return cls(
+            self._path_option(),
+            self.options.get("group", "/"),
+            schema,
+            int(self.options.get("partition_rows", DEFAULT_PARTITION_ROWS)),
         )
 
+    def reader(self, schema: StructType) -> "ZarrReader":
+        return self._scan(ZarrReader, schema)
+
     def streamReader(self, schema: StructType) -> "ZarrStreamReader":
-        return ZarrStreamReader(
-            path=self._path_option(),
-            group_path=self.options.get("group", "/"),
-            schema=schema,
-            partition_rows=int(
-                self.options.get("partition_rows", DEFAULT_PARTITION_ROWS)
-            ),
-        )
+        return self._scan(ZarrStreamReader, schema)
 
     def writer(self, schema: StructType, overwrite: bool) -> "ZarrWriter":
         return ZarrWriter(
@@ -166,51 +219,74 @@ class ZarrDataSource(DataSource):
         )
 
 
-class ZarrReader(DataSourceReader):
+class _ZarrScan:
+    """The read core shared by :class:`ZarrReader` and
+    :class:`ZarrStreamReader` (see the module docstring).
+
+    Only scalars are kept: the reader is pickled to every task, so the
+    per-chunk stats are re-read by ``partitions()`` instead of carried."""
+
     def __init__(
         self, path: str, group_path: str, schema: StructType, partition_rows: int
     ):
         self._path = path
         self._group_path = group_path
-        self._schema = schema
         self._columns = [f.name for f in schema.fields]
         group = zarrv3.open_group(path, group_path)
         missing = [c for c in self._columns if c not in group.arrays]
         if missing:
             raise ValueError(f"zarr group has no arrays named {missing}")
         self._n_rows = group.n_rows
-        # Partition granularity: align to the largest chunk among the read
-        # columns so most chunks are read by exactly one task; columns with
-        # smaller chunks are sliced per-range (decode is still chunk-local).
-        # The explicit partition_rows option is honored as-is; the DEFAULT is
-        # additionally capped so small stores still fan out (~TARGET_PARTS
-        # tasks) instead of decoding serially in one task, while big stores
-        # keep ~partition_rows-sized tasks (amortizing per-task overhead at
-        # cluster scale). 1M-row full scan: 1.05s -> 0.30s on local[32].
-        lead = max(group.arrays[c].chunk_rows for c in self._columns)
-        if partition_rows == DEFAULT_PARTITION_ROWS:
-            partition_rows = min(
-                partition_rows, max(1, self._n_rows // _TARGET_PARTS)
-            )
-        self._rows_per_part = max(lead, (partition_rows // lead) * lead or lead)
-        self._chunk_rows = lead
+        # align to the largest chunk among the read columns so most chunks
+        # are read by exactly one task; columns with smaller chunks are
+        # sliced per range (decode is still chunk-local)
+        self._lead = max(group.arrays[c].chunk_rows for c in self._columns)
+        self._partition_rows = partition_rows
         self._filters: list[Filter] = []
 
-    # -- filter pushdown ----------------------------------------------------
+    def _slices(self, lo: int, hi: int) -> Iterator[tuple[int, int]]:
+        """Chunk-local pieces of ``[lo, hi)``: each ends on a lead-chunk
+        boundary or at ``hi``."""
+        while lo < hi:
+            end = min((lo // self._lead + 1) * self._lead, hi)
+            yield lo, end
+            lo = end
 
-    _SUPPORTED = (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        LessThan,
-        LessThanOrEqual,
-        In,
-        IsNull,
-        IsNotNull,
-        StringStartsWith,
-        StringEndsWith,
-        StringContains,
-    )
+    def _plan(self, lo: int, hi: int, keep=None) -> List[RowRange]:
+        """Partitions of ``[lo, hi)``: the pieces ``keep(lo, hi)`` accepts,
+        coalesced up to the rows per partition of the fan-out rule."""
+        per_part = self._partition_rows
+        if per_part == DEFAULT_PARTITION_ROWS:
+            per_part = min(per_part, max(1, (hi - lo) // _TARGET_PARTS))
+        per_part = max(self._lead, per_part // self._lead * self._lead)
+        parts: list[RowRange] = []
+        for a, b in self._slices(lo, hi):
+            if keep is not None and not keep(a, b):
+                continue
+            if parts and parts[-1].stop == a and b - parts[-1].start <= per_part:
+                parts[-1].stop = b
+            else:
+                parts.append(RowRange(a, b))
+        return parts or [RowRange(lo, lo)]
+
+    def read(self, partition: RowRange) -> Iterator[pa.RecordBatch]:
+        # one batch per chunk-local slice, so no task holds its whole range
+        group = zarrv3.open_group(self._path, self._group_path)
+        arrays = [group.arrays[c] for c in self._columns]
+        for lo, hi in self._slices(partition.start, partition.stop):
+            batch = pa.record_batch(
+                [zarr_to_arrow_array(m.dtype, m.read_range(lo, hi)) for m in arrays],
+                names=self._columns,
+            )
+            if self._filters:
+                batch = batch.filter(_mask(batch, self._filters))
+            if batch.num_rows:
+                yield batch
+
+
+class ZarrReader(_ZarrScan, DataSourceReader):
+    """Batch scan: chunk-aligned partitions over the whole store, pruned by
+    the per-chunk stats against the claimed filters."""
 
     def pushFilters(self, filters: List[Filter]) -> Iterator[Filter]:
         """Claim simple predicates; evaluate them batch-side in ``read``.
@@ -221,7 +297,7 @@ class ZarrReader(DataSourceReader):
         """
         for f in filters:
             if (
-                isinstance(f, self._SUPPORTED)
+                type(f) in _FILTERS
                 and len(f.attribute) == 1
                 and f.attribute[0] in self._columns
             ):
@@ -229,174 +305,101 @@ class ZarrReader(DataSourceReader):
             else:
                 yield f  # let Spark evaluate the rest
 
-    # -- planning / execution -------------------------------------------------
-
     def partitions(self) -> Sequence[RowRange]:
-        n = self._n_rows
-        if n == 0:
-            return [RowRange(0, 0)]
         # chunk pruning: with per-chunk min/max stats (written by our sink
         # into the array attributes) and claimed filters, whole chunks that
         # cannot satisfy the conjunction are never read — the Zarr analogue
-        # of parquet row-group pruning. Surviving chunk ranges coalesce up
-        # to rows_per_part.
+        # of parquet row-group pruning
         group = zarrv3.open_group(self._path, self._group_path)
-        step = self._chunk_rows
-        survivors: list[tuple[int, int]] = []
-        for lo in range(0, n, step):
-            hi = min(lo + step, n)
-            if self._chunk_may_match(group, lo, hi):
-                if (
-                    survivors
-                    and survivors[-1][1] == lo
-                    and (hi - survivors[-1][0]) <= self._rows_per_part
-                ):
-                    survivors[-1] = (survivors[-1][0], hi)
-                else:
-                    survivors.append((lo, hi))
-        if not survivors:
-            return [RowRange(0, 0)]
-        return [RowRange(lo, hi) for lo, hi in survivors]
+        return self._plan(
+            0, self._n_rows, keep=lambda lo, hi: self._chunk_may_match(group, lo, hi)
+        )
 
     def _chunk_may_match(self, group: zarrv3.ZarrGroup, lo: int, hi: int) -> bool:
         """False only when the stats PROVE no row in [lo, hi) can pass every
         claimed filter; missing/malformed stats always pass."""
         for f in self._filters:
-            col = f.attribute[0]
-            meta = group.arrays[col]
+            test = _FILTERS[type(f)][1]
+            meta = group.arrays[f.attribute[0]]
             stats = meta.chunk_stats
-            if not stats:
+            if test is None or not stats:
                 continue
-            val = self._stat_comparable(f, meta)
+            if isinstance(f, In):
+                val = [_stat_value(v, meta.dtype.unit) for v in f.value]
+                val = None if None in val else val
+            else:
+                val = _stat_value(f.value, meta.dtype.unit)
             if val is None:
                 continue
-            crows = meta.chunk_rows
-            first, last = lo // crows, (hi - 1) // crows
+            first, last = lo // meta.chunk_rows, (hi - 1) // meta.chunk_rows
             mins = stats["min"][first : last + 1]
             maxs = stats["max"][first : last + 1]
             if len(mins) != last - first + 1:
                 continue  # stats don't cover the range: don't prune
-            may = False
-            for mn, mx in zip(mins, maxs):
-                if mn is None or mx is None:
-                    may = True  # unknown chunk: must read
-                    break
-                if isinstance(f, EqualTo):
-                    ok = mn <= val <= mx
-                elif isinstance(f, GreaterThan):
-                    ok = mx > val
-                elif isinstance(f, GreaterThanOrEqual):
-                    ok = mx >= val
-                elif isinstance(f, LessThan):
-                    ok = mn < val
-                elif isinstance(f, LessThanOrEqual):
-                    ok = mn <= val
-                elif isinstance(f, In):
-                    ok = any(mn <= v <= mx for v in val)
-                else:
-                    ok = True
-                if ok:
-                    may = True
-                    break
-            if not may:
+            if not any(
+                mn is None or mx is None or test(mn, mx, val)  # None: unknown chunk
+                for mn, mx in zip(mins, maxs)
+            ):
                 return False
         return True
 
-    @staticmethod
-    def _stat_comparable(f: Filter, meta: zarrv3.ZarrArrayMeta):
-        """Convert the filter's value(s) into the stats' domain; None when
-        the filter shape doesn't support pruning."""
-        import datetime as _dt
 
-        if not isinstance(
-            f, (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, In)
-        ):
-            return None
+class ZarrStreamReader(_ZarrScan, DataSourceStreamReader):
+    """Streaming source that TAILS a growing Zarr store: offsets are
+    committed row counts, each micro-batch reads the row ranges appended
+    since the last batch (``spark.readStream.format("zarr").load(store)``).
 
-        def conv(v):
-            if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-                v = _dt.datetime(v.year, v.month, v.day)
-            if isinstance(v, _dt.datetime):
-                # datetime stats are integer ticks in the array unit.
-                # Exact integer/rational arithmetic only: float
-                # total_seconds() rounds (~0.25us at us precision), which
-                # could push the comparable across a chunk's true min/max
-                # and wrongly prune a boundary-matching chunk.
-                from fractions import Fraction
+    Visibility is the append sink's metadata commit: chunk files written
+    by an in-flight ``append_zarr_distributed`` are invisible until its
+    ``zarr.json`` flips the shape, so ``latestOffset`` (the current
+    ``n_rows``) only ever exposes fully committed rows — the stream can
+    never observe a torn append. Offsets are monotone because append only
+    grows the shape; a store REPLACED with fewer rows is a contract
+    violation and fails loudly rather than silently re-reading.
 
-                if v.tzinfo is not None:
-                    v = v.replace(tzinfo=None) - v.utcoffset()
-                delta = v - _dt.datetime(1970, 1, 1)
-                ticks_us = (
-                    delta.days * 86_400 + delta.seconds
-                ) * 10**6 + delta.microseconds
-                per_us = {
-                    "s": Fraction(1, 10**6),
-                    "ms": Fraction(1, 10**3),
-                    "us": Fraction(1),
-                    "ns": Fraction(1000),
-                }[meta.dtype.unit or "us"]
-                ticks = ticks_us * per_us
-                return int(ticks) if ticks.denominator == 1 else ticks
-            if isinstance(v, (int, float, str)):
-                return v
-            return None
+    A micro-batch is planned and read by the same core as a batch scan,
+    with the same fan-out rule applied to the new rows: a micro-batch over
+    the whole store gets the batch reader's unfiltered partitions. Its
+    first piece starts mid-chunk when the previous batch ended inside a
+    chunk, so that boundary chunk is re-read only for its new tail rows.
+    """
 
-        if isinstance(f, In):
-            vals = [conv(v) for v in f.value]
-            return None if any(v is None for v in vals) else vals
-        v = conv(f.value)
-        return v
+    def initialOffset(self) -> dict:
+        # new streams start at the beginning of the store
+        return {"rows": 0}
 
-    def read(self, partition: RowRange) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        group = zarrv3.open_group(self._path, self._group_path)
-        arrow_types = {
-            c: zarr_to_arrow_type(group.arrays[c].dtype) for c in self._columns
-        }
-        # Emit one batch per lead-chunk so no task holds its whole range.
-        step = self._chunk_rows
-        for lo in range(partition.start, partition.stop, step):
-            hi = min(lo + step, partition.stop)
-            batch = _range_batch(group, self._columns, arrow_types, lo, hi)
-            if self._filters:
-                mask = self._eval_filters(batch)
-                if mask is not None:
-                    batch = batch.filter(mask)
-            if batch.num_rows:
-                yield batch
+    def latestOffset(self) -> dict:
+        # the append commit flips per-array zarr.json files with bare
+        # renames; a read landing inside that microseconds-wide window can
+        # see arrays with disagreeing shapes — retry briefly before failing
+        import time
 
-    def _eval_filters(self, batch: "pa.RecordBatch"):  # noqa: F821
-        import pyarrow.compute as pc
+        last_err: Exception | None = None
+        for _ in range(5):
+            try:
+                return {
+                    "rows": zarrv3.open_group(
+                        self._path, self._group_path
+                    ).n_rows
+                }
+            except zarrv3.ZarrError as ex:
+                last_err = ex
+                time.sleep(0.05)
+        raise last_err
 
-        mask = None
-        for f in self._filters:
-            col = batch.column(f.attribute[0])
-            if isinstance(f, EqualTo):
-                m = pc.equal(col, f.value)
-            elif isinstance(f, GreaterThan):
-                m = pc.greater(col, f.value)
-            elif isinstance(f, GreaterThanOrEqual):
-                m = pc.greater_equal(col, f.value)
-            elif isinstance(f, LessThan):
-                m = pc.less(col, f.value)
-            elif isinstance(f, LessThanOrEqual):
-                m = pc.less_equal(col, f.value)
-            elif isinstance(f, In):
-                m = pc.is_in(col, value_set=__import__("pyarrow").array(list(f.value)))
-            elif isinstance(f, IsNull):
-                m = pc.is_null(col)
-            elif isinstance(f, IsNotNull):
-                m = pc.is_valid(col)
-            elif isinstance(f, StringStartsWith):
-                m = pc.starts_with(col, f.value)
-            elif isinstance(f, StringEndsWith):
-                m = pc.ends_with(col, f.value)
-            elif isinstance(f, StringContains):
-                m = pc.match_substring(col, f.value)
-            else:  # pragma: no cover - pushFilters only claims supported ones
-                continue
-            mask = m if mask is None else pc.and_(mask, m)
-        return mask
+    def partitions(self, start: dict, end: dict) -> Sequence[RowRange]:
+        lo, hi = int(start["rows"]), int(end["rows"])
+        if hi < lo:
+            raise ValueError(
+                f"zarr stream offset went backwards ({lo} -> {hi}): the "
+                "store was replaced with fewer rows; streams may only tail "
+                "appends"
+            )
+        return self._plan(lo, hi)
+
+    def commit(self, end: dict) -> None:
+        # offsets are externally durable (the store itself); nothing to do
+        pass
 
 
 # ---------------------------------------------------------------------------
@@ -578,111 +581,3 @@ class ZarrWriter(DataSourceArrowWriter):
         import shutil
 
         shutil.rmtree(self._staging, ignore_errors=True)
-
-
-class ZarrStreamReader(DataSourceStreamReader):
-    """Streaming source that TAILS a growing Zarr store: offsets are
-    committed row counts, each micro-batch reads the chunk-aligned row
-    ranges appended since the last batch (``spark.readStream
-    .format("zarr").load(store)``).
-
-    Visibility is the append sink's metadata commit: chunk files written
-    by an in-flight ``append_zarr_distributed`` are invisible until its
-    ``zarr.json`` flips the shape, so ``latestOffset`` (the current
-    ``n_rows``) only ever exposes fully committed rows — the stream can
-    never observe a torn append. Offsets are monotone because append only
-    grows the shape; a store REPLACED with fewer rows is a contract
-    violation and fails loudly rather than silently re-reading.
-
-    Partitions between two offsets are chunk-aligned row ranges (same
-    fan-out policy as the batch reader), decoded executor-side with the
-    identical Arrow path; the boundary chunk of a prior batch is re-read
-    only for its newly appended tail rows.
-    """
-
-    def __init__(
-        self, path: str, group_path: str, schema: StructType, partition_rows: int
-    ):
-        self._path = path
-        self._group_path = group_path
-        self._schema = schema
-        self._columns = [f.name for f in schema.fields]
-        group = zarrv3.open_group(path, group_path)
-        missing = [c for c in self._columns if c not in group.arrays]
-        if missing:
-            raise ValueError(f"zarr group has no arrays named {missing}")
-        lead = max(group.arrays[c].chunk_rows for c in self._columns)
-        if partition_rows == DEFAULT_PARTITION_ROWS:
-            partition_rows = min(partition_rows, max(1, group.n_rows or 1))
-        self._rows_per_part = max(lead, (partition_rows // lead) * lead or lead)
-        self._chunk_rows = lead
-
-    def initialOffset(self) -> dict:
-        # new streams start at the beginning of the store
-        return {"rows": 0}
-
-    def latestOffset(self) -> dict:
-        # the append commit flips per-array zarr.json files with bare
-        # renames; a read landing inside that microseconds-wide window can
-        # see arrays with disagreeing shapes — retry briefly before failing
-        import time
-
-        last_err: Exception | None = None
-        for _ in range(5):
-            try:
-                return {
-                    "rows": zarrv3.open_group(
-                        self._path, self._group_path
-                    ).n_rows
-                }
-            except zarrv3.ZarrError as ex:
-                last_err = ex
-                time.sleep(0.05)
-        raise last_err
-
-    def partitions(self, start: dict, end: dict) -> Sequence[RowRange]:
-        lo, hi = int(start["rows"]), int(end["rows"])
-        if hi < lo:
-            raise ValueError(
-                f"zarr stream offset went backwards ({lo} -> {hi}): the "
-                "store was replaced with fewer rows; streams may only tail "
-                "appends"
-            )
-        if hi == lo:
-            return [RowRange(lo, lo)]
-        step = self._rows_per_part
-        # align splits to chunk boundaries ABOVE lo so no chunk is decoded
-        # by two tasks of the same batch
-        first_split = -(-lo // self._chunk_rows) * self._chunk_rows
-        bounds = [lo]
-        b = max(first_split, self._chunk_rows)
-        while b < hi:
-            if b > bounds[-1] and (b - bounds[-1]) >= step:
-                bounds.append(b)
-            b += self._chunk_rows
-        bounds.append(hi)
-        return [
-            RowRange(bounds[i], bounds[i + 1])
-            for i in range(len(bounds) - 1)
-            if bounds[i + 1] > bounds[i]
-        ]
-
-    def read(self, partition: RowRange) -> Iterator["pa.RecordBatch"]:  # noqa: F821
-        group = zarrv3.open_group(self._path, self._group_path)
-        arrow_types = {
-            c: zarr_to_arrow_type(group.arrays[c].dtype) for c in self._columns
-        }
-        step = self._chunk_rows
-        lo = partition.start
-        while lo < partition.stop:
-            # chunk-local slices, starting mid-chunk when the previous
-            # batch ended inside a chunk
-            hi = min((lo // step + 1) * step, partition.stop)
-            batch = _range_batch(group, self._columns, arrow_types, lo, hi)
-            if batch.num_rows:
-                yield batch
-            lo = hi
-
-    def commit(self, end: dict) -> None:
-        # offsets are externally durable (the store itself); nothing to do
-        pass

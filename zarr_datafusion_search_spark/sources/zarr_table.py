@@ -61,14 +61,12 @@ class ZarrTable:
     ) -> DataFrame:
         """DataFrame over the ``zarr`` data source (chunk-partitioned scan)."""
         _ensure_registered(spark)
-        reader = (
+        return (
             spark.read.format("zarr")
             .option("group", self.group_path)
             .schema(self._pruned(columns))
+            .load(self.store_path)
         )
-        if columns:
-            reader = reader.option("columns", ",".join(columns))
-        return reader.load(self.store_path)
 
     def register(self, spark: SparkSession, name: str) -> DataFrame:
         """Register as a temp view so ``spark.sql`` can query it — the

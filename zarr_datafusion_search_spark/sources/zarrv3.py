@@ -483,7 +483,13 @@ def open_array(store_path: str, array_path: str) -> ZarrArrayMeta:
     meta_path = os.path.join(store_path, array_path, "zarr.json")
     if not _exists(meta_path):
         raise ZarrError(f"no zarr.json at {meta_path}")
-    doc = _load_json(meta_path)
+    return _array_meta(store_path, array_path, _load_json(meta_path), meta_path)
+
+
+def _array_meta(
+    store_path: str, array_path: str, doc: dict, meta_path: str
+) -> ZarrArrayMeta:
+    """An array's parsed ``zarr.json`` document -> its metadata."""
     if doc.get("zarr_format") != 3 or doc.get("node_type") != "array":
         raise ZarrError(f"{meta_path} is not a Zarr v3 array")
     shape = tuple(doc["shape"])
@@ -552,7 +558,7 @@ def open_group(store_path: str, group_path: str = "/") -> ZarrGroup:
         if child_doc.get("node_type") != "array":
             continue
         rel = (group_rel + "/" + entry) if group_rel else entry
-        meta = open_array(store_path, rel)
+        meta = _array_meta(store_path, rel, child_doc, child_meta)
         if len(meta.shape) != 1:
             raise ZarrError(
                 f"array {rel} has rank {len(meta.shape)}; the table model "
